@@ -68,12 +68,12 @@ class BroadcastLintSpec extends AnyFunSuite with SparkSpec {
       "SimHash candidate pairs: 16-bit chunk blocking + hamming<=3 cut before the hint; pair frame is the bounded survivor set",
     "q69_decontamination" ->
       "benchmark gram set: grams of the fixed benchmark corpus slice, corpus-independent by construction",
+    "q217_conformal_coverage" ->
+      "calibration model attach: the hinted model frame is the localCheckpointed aggregate grouped only by o_orderpriority (5-value enum fixed by the data model) — <=5 rows at any corpus size; the n_cal and q-hat hints are scalar aggregates the structural rule already admits",
     "q234_isotonic_calibration" ->
       "PAVA interval grid: every hinted frame derives from the localCheckpointed 10-row decile aggregate (fixed literal decile count) — <=10-row bin/t frames, <=55-row interval frame at any corpus size",
     "q249_stump_split" ->
       "stump argmin rival side: the localCheckpointed candidate frame has one row per DISTINCT per-user pre-period event count — an activity-domain-bounded histogram (corpus growth adds users, not new per-user count values), the same domain argument as the q224/q81 value histograms",
-    "q251_markov_attribution" ->
-      "chain scalar attach: both hinted frames derive from the localCheckpointed START-value frame — exactly one row per chain, 5 chains (base + one per channel of a lint-recognized bounded event vocabulary) at any corpus size",
     "q254_mh_odds_ratio" ->
       "MH scalar attach: the hinted frames derive from the localCheckpointed 25-row nation-stratum frame (nation is a fixed-size table) — one scalar count and one 1-row ordered-fold result at any corpus size",
     "q255_binseg_changepoint" ->

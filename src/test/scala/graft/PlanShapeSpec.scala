@@ -1,5 +1,12 @@
 package graft
 
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{QueryExecution, SortExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the shuffle-count claims PLANS.md makes for the narrow/
@@ -8,19 +15,21 @@ import org.scalatest.funsuite.AnyFunSuite
   * Broadcast exchanges are excluded — they are the cheap side of the
   * designs under test.
   */
-class PlanShapeSpec extends AnyFunSuite with SparkSpec {
+class PlanShapeSpec extends AnyFunSuite with SparkSpec
+    with AdaptiveSparkPlanHelper {
 
-  private def shuffles(name: String): Int = {
-    val plan = SparkEntry.queries(name)(spark, Sf)
-      .queryExecution.executedPlan.toString
-    // count shuffle exchanges only (hash/range/round-robin), not
-    // BroadcastExchange and not the one-row SinglePartition folds of
-    // tiny stats aggregates. Matched anywhere in the line: exchanges on
-    // `:` branch-continuation lines count the same as spine `+-` ones
-    // (the old line-anchored form silently missed branch exchanges).
+  private def shuffles(name: String): Int =
+    shuffleCount(SparkEntry.queries(name)(spark, Sf)
+      .queryExecution.executedPlan.toString)
+
+  // count shuffle exchanges only (hash/range/round-robin), not
+  // BroadcastExchange and not the one-row SinglePartition folds of
+  // tiny stats aggregates. Matched anywhere in the line: exchanges on
+  // `:` branch-continuation lines count the same as spine `+-` ones
+  // (the old line-anchored form silently missed branch exchanges).
+  private def shuffleCount(plan: String): Int =
     "Exchange (hashpartitioning|rangepartitioning|RoundRobinPartitioning)".r
       .findAllIn(plan).size
-  }
 
   test("chunking (q65) is a zero-shuffle narrow plan") {
     assert(shuffles("q65_doc_chunks") == 0)
@@ -304,11 +313,17 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
     assert(plan.contains("InMemoryTableScan"),
       s"oriented edges must be cache-scanned, not replanned:\n$plan")
     df.count()
-    // repeat invocation is a memo hit: no new cached RDDs stack up
-    val before = spark.sparkContext.getPersistentRDDs.size
+    // repeat invocation is a memo hit: no new cached RDDs stack up.
+    // Compare RDD ids, not map sizes: getPersistentRDDs is weak-valued,
+    // so unreferenced localCheckpoint RDDs of earlier queries may be
+    // collected mid-test and shrink the map. The memo holds its cached
+    // frames strongly, so a stacking cache still shows up as new ids.
+    val before = spark.sparkContext.getPersistentRDDs.keySet
     SparkEntry.queries("q157_triangles")(spark, Sf).count()
-    assert(spark.sparkContext.getPersistentRDDs.size == before,
-      "repeat q157 must reuse the session-memoized cached frames")
+    val added = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(added.isEmpty,
+      s"repeat q157 must reuse the session-memoized cached frames; " +
+        s"new persisted RDDs: ${added.toSeq.sorted.mkString(", ")}")
   }
 
   test("KM survival (q159): corpus collapses before the calendar-bounded window") {
@@ -409,7 +424,53 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("lead-time quartiles (q178): heavy shuffle ends at the (priority, days) count frame") {
-    assert(shuffles("q178_leadtime_quartiles") == 2)
+    // the quartile sweep runs driver-side on the collected histogram,
+    // so the heavy shuffle lives in the histogram collect job, not in
+    // the returned plan: capture that job and pin it — exactly one
+    // exchange, keyed on the (priority, days) count frame, and no
+    // per-group window or sort over raw rows
+    val histJobs = new ConcurrentLinkedQueue[QueryExecution]()
+    val seen = new CountDownLatch(1)
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit =
+        if (funcName == "collect" && qe.analyzed.toString.contains("lead_days")) {
+          histJobs.add(qe); seen.countDown()
+        }
+      override def onFailure(funcName: String, qe: QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val df =
+      try {
+        val q = SparkEntry.queries("q178_leadtime_quartiles")(spark, Sf)
+        // listener events arrive asynchronously on the listener bus
+        assert(seen.await(60, TimeUnit.SECONDS),
+          "no histogram collect job observed for q178")
+        q
+      } finally spark.listenerManager.unregister(listener)
+    val returned = df.queryExecution.executedPlan.toString
+    assert(shuffleCount(returned) == 0,
+      s"q178's returned frame must be the collected sweep:\n$returned")
+    val hist = histJobs.peek().executedPlan
+    val exchanges = collect(hist) { case e: ShuffleExchangeExec => e }
+    assert(exchanges.size == 1,
+      s"histogram job must pay exactly one shuffle:\n$hist")
+    val keys = exchanges.head.outputPartitioning match {
+      case HashPartitioning(exprs, _) => exprs.map {
+        case a: Attribute => a.name
+        case e => e.sql
+      }
+      case other => Seq(other.toString)
+    }
+    assert(keys == Seq("o_orderpriority", "lead_days"),
+      s"histogram shuffle must key on (o_orderpriority, lead_days):\n$hist")
+    val ordered = collect(hist) {
+      case p if p.nodeName.contains("Window") || p.isInstanceOf[SortExec] =>
+        p.nodeName
+    }
+    assert(ordered.isEmpty,
+      s"histogram job must not window or sort raw rows:\n$hist")
   }
 
   test("rolling correlation (q179): ONE corpus fold; all five moments from one day-frame window") {
