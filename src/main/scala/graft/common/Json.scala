@@ -5,12 +5,16 @@ package graft.common
   * exists in the jar set, and `Scorer.parseFlatJson`'s regex only
   * handles flat objects — this covers the full value grammar (objects,
   * arrays, strings, numbers, booleans, null) for driver-side config
-  * reads. Never on an executor hot path.
+  * reads and the serving replica's request bodies. Never on an executor
+  * hot path. Nesting deeper than [[MaxDepth]] is refused, so a hostile
+  * body cannot overflow the parsing thread's stack.
   *
   * Values map to: Map[String, Any], Seq[Any], String, Double, Boolean,
   * null.
   */
 object Json {
+
+  val MaxDepth = 512
 
   def parse(text: String): Any = {
     val p = new P(text)
@@ -31,6 +35,7 @@ object Json {
 
   private final class P(s: String) {
     var pos = 0
+    private var depth = 0
     def eof: Boolean = pos >= s.length
     def skipWs(): Unit =
       while (!eof && Character.isWhitespace(s.charAt(pos))) pos += 1
@@ -46,14 +51,21 @@ object Json {
       skipWs()
       require(!eof, "unexpected end of JSON")
       s.charAt(pos) match {
-        case '{' => objectValue()
-        case '[' => arrayValue()
+        case '{' => nested(objectValue())
+        case '[' => nested(arrayValue())
         case '"' => stringValue()
         case 't' => literal("true", true)
         case 'f' => literal("false", false)
         case 'n' => literal("null", null)
         case _ => numberValue()
       }
+    }
+
+    private def nested(v: => Any): Any = {
+      depth += 1
+      require(depth <= MaxDepth,
+        s"JSON nested deeper than $MaxDepth at offset $pos")
+      try v finally depth -= 1
     }
 
     private def literal(lit: String, v: Any): Any = {

@@ -39,8 +39,10 @@ object Silver {
     val normalized = bronze.select(
       lower(trim(col("order_id"))).as("order_id"),
       lower(trim(col("customer_id"))).as("customer_id"),
-      to_timestamp(trim(col("order_purchase_timestamp")),
-        "yyyy-MM-dd HH:mm:ss").as("order_purchase_ts"),
+      // under ANSI, to_timestamp throws on an unparseable value; the null
+      // try_to_timestamp returns routes the row to the invalid rows
+      try_to_timestamp(trim(col("order_purchase_timestamp")),
+        lit("yyyy-MM-dd HH:mm:ss")).as("order_purchase_ts"),
       normalizeStatus(col("order_status")).as("order_status"),
       col("run_id").as("_bronze_run_id"),
       col("ingest_ts").as("_bronze_ingest_ts"),

@@ -1,12 +1,13 @@
 package graft.serving
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
-import graft.common.JsonIO
+import graft.common.{Json, JsonIO}
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
-import java.util.concurrent.{ConcurrentHashMap, Executors}
-import java.util.concurrent.atomic.AtomicLong
+import java.util.concurrent.{ConcurrentHashMap, Executors, TimeUnit}
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** The serving process: an HTTP loop over `Scorer`/`Auth`, mirroring the
   * reference's FastAPI app (`services/api/app/main.py`,
@@ -29,6 +30,19 @@ import org.apache.spark.sql.SparkSession
   * reference's observability increments; raw customer ids never reach
   * log lines (only `Auth.customerIdLogHash`).
   *
+  * Transport:
+  *   - TCP_NODELAY is on. The JDK server sends a response's headers and
+  *     body as two writes; with Nagle's algorithm on, the body waits for
+  *     the client's delayed ACK (~40 ms on loopback) on every keep-alive
+  *     request.
+  *   - Request bodies are capped at [[PredictServer.MaxBodyBytes]]: a
+  *     larger declared `Content-Length` is answered 413 unread, and no
+  *     more than the cap plus one byte is ever read.
+  *   - Predict bodies are parsed as JSON ([[graft.common.Json]]) and must
+  *     be an object whose top-level `customer_id` is a string.
+  *   - `stop()` closes the listener, then shuts down the request pool
+  *     and waits for it, so a stopped server leaves no thread behind.
+  *
   * Scoring state is immutable after construction (bundle + in-memory
   * feature store), matching the reference's startup-loaded stores; a
   * `None` store/bundle models the not-ready states the reference
@@ -40,11 +54,23 @@ final class PredictServer(
     bundle: Option[Scorer.Bundle],
     store: Option[Map[String, Scorer.FeatureRecord]],
     port: Int = 0) {
+  import PredictServer._
 
+  // The JDK's ServerConfig reads this once, when the JVM creates its
+  // first HttpServer, so it must be set before that (ServingSpec's
+  // keep-alive latency test fails if it is not).
+  System.setProperty("sun.net.httpserver.nodelay", "true")
   private val server =
     HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
   server.createContext("/", new RootHandler)
-  server.setExecutor(Executors.newFixedThreadPool(4))
+
+  /** Name prefix of this server's request threads. */
+  private[graft] val threadNamePrefix =
+    s"predict-server-${serverIds.incrementAndGet()}-"
+  private val threadIds = new AtomicInteger()
+  private val pool = Executors.newFixedThreadPool(4, (r: Runnable) =>
+    new Thread(r, threadNamePrefix + threadIds.incrementAndGet()))
+  server.setExecutor(pool)
 
   private val counterMap = new ConcurrentHashMap[String, AtomicLong]()
   private def inc(name: String): Unit =
@@ -56,7 +82,11 @@ final class PredictServer(
   }
 
   def start(): Unit = server.start()
-  def stop(): Unit = server.stop(0)
+  def stop(): Unit = {
+    server.stop(0)
+    pool.shutdown()
+    if (!pool.awaitTermination(10, TimeUnit.SECONDS)) pool.shutdownNow()
+  }
   /** Bound port (pass port=0 to let the OS pick a free one). */
   def boundPort: Int = server.getAddress.getPort
 
@@ -116,21 +146,12 @@ final class PredictServer(
       inc("http_exception_401_total")
       return Resp(401, errBody("Invalid or missing API key.", rid))
     }
-    val parsed = Scorer.parseFlatJson(body)
-    val customerId = parsed.get("customer_id").map(_.trim) match {
-      case None =>
+    val customerId = requestCustomerId(body) match {
+      case Left(error) =>
         inc("http_validation_errors_total")
         return Resp(422, errBody("Invalid request payload.", rid,
-          Some(Seq("customer_id" -> "field required"))))
-      case Some("") =>
-        inc("http_validation_errors_total")
-        return Resp(422, errBody("Invalid request payload.", rid,
-          Some(Seq("customer_id" -> "customer_id must not be blank."))))
-      case Some(c) if c.length > 128 =>
-        inc("http_validation_errors_total")
-        return Resp(422, errBody("Invalid request payload.", rid,
-          Some(Seq("customer_id" -> "customer_id too long (max 128)."))))
-      case Some(c) => c
+          Some(Seq(error))))
+      case Right(c) => c
     }
     val st = store.getOrElse {
       inc("prediction_feature_store_not_ready_total")
@@ -164,19 +185,52 @@ final class PredictServer(
         s""""request_id": "${JsonIO.escape(rid)}"}""")
   }
 
+  /** The trimmed top-level `customer_id` of a predict body, or the
+    * (loc, msg) error that refuses the body.
+    */
+  private def requestCustomerId(
+      body: String): Either[(String, String), String] = {
+    val parsed = try Json.parse(body) catch {
+      case NonFatal(_) => return Left("body" -> "body is not valid JSON.")
+    }
+    parsed match {
+      case o: Map[_, _] => Json.obj(o).get("customer_id") match {
+        case None => Left("customer_id" -> "field required")
+        case Some(s: String) => s.trim match {
+          case "" => Left("customer_id" -> "customer_id must not be blank.")
+          case c if c.length > 128 =>
+            Left("customer_id" -> "customer_id too long (max 128).")
+          case c => Right(c)
+        }
+        case Some(_) =>
+          Left("customer_id" -> "customer_id must be a string.")
+      }
+      case _ => Left("body" -> "body must be a JSON object.")
+    }
+  }
+
   private final class RootHandler extends HttpHandler {
     override def handle(ex: HttpExchange): Unit = {
       val rid = Auth.requestId(
         Option(ex.getRequestHeaders.getFirst("X-Request-Id")))
       val resp =
         try {
-          val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
-          route(ex.getRequestMethod,
-            ex.getRequestURI.getPath,
-            Option(ex.getRequestHeaders.getFirst("X-API-Key")),
-            rid, body)
+          val tooLong = Option(ex.getRequestHeaders.getFirst("Content-Length"))
+            .flatMap(_.trim.toLongOption).exists(_ > MaxBodyBytes)
+          val body =
+            if (tooLong) Array.emptyByteArray
+            else ex.getRequestBody.readNBytes(MaxBodyBytes + 1)
+          if (tooLong || body.length > MaxBodyBytes) {
+            inc("http_exception_413_total")
+            Resp(413, errBody(
+              s"Request body too large (max $MaxBodyBytes bytes).", rid))
+          } else
+            route(ex.getRequestMethod,
+              ex.getRequestURI.getPath,
+              Option(ex.getRequestHeaders.getFirst("X-API-Key")),
+              rid, new String(body, UTF_8))
         } catch {
-          case scala.util.control.NonFatal(_) =>
+          case NonFatal(_) =>
             inc("http_exception_500_total")
             Resp(500, errBody("Internal server error.", rid))
         }
@@ -188,6 +242,13 @@ final class PredictServer(
       try os.write(bytes) finally os.close()
     }
   }
+}
+
+object PredictServer {
+  /** Largest request body the server reads, in bytes. */
+  val MaxBodyBytes: Int = 64 * 1024
+
+  private val serverIds = new AtomicInteger()
 }
 
 /** CLI entry point: `runMain graft.serving.PredictServerMain

@@ -181,16 +181,20 @@ object Scorer {
     parseFlatJson(new String(
       java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)), "UTF-8"))
 
-  /** Flat JSON-object parser (sidecars + request bodies — same shape as
-    * JsonIO.render emits; nested objects are not produced or consumed).
+  private val FlatPair =
+    """"((?:[^"\\]|\\.)*)"\s*:\s*(?:"((?:[^"\\]|\\.)*)"|([-0-9.eE+]+|true|false))""".r
+
+  /** Flat JSON-object parser for the sidecars this module writes (same
+    * shape as JsonIO.render emits). It scans for key/value pairs at any
+    * depth, so it is no validator: request bodies go through
+    * [[graft.common.Json]].
     */
   private[graft] def parseFlatJson(txt: String): Map[String, String] =
-    """"((?:[^"\\]|\\.)*)"\s*:\s*(?:"((?:[^"\\]|\\.)*)"|([-0-9.eE+]+|true|false))"""
-      .r.findAllMatchIn(txt).map { m =>
-        val k = unescape(m.group(1))
-        val v = if (m.group(2) != null) unescape(m.group(2)) else m.group(3)
-        k -> v
-      }.toMap
+    FlatPair.findAllMatchIn(txt).map { m =>
+      val k = unescape(m.group(1))
+      val v = if (m.group(2) != null) unescape(m.group(2)) else m.group(3)
+      k -> v
+    }.toMap
 
   /** Inverse of JsonIO.escape — values must round-trip, not accumulate
     * literal backslash sequences.

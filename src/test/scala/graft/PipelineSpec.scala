@@ -262,6 +262,35 @@ class PipelineSpec extends AnyFunSuite with SparkSpec {
     assert(rows1 == rows2) // ...with identical business content
   }
 
+  test("publishSilver routes an unparseable timestamp to the invalid rows") {
+    import spark.implicits._
+    val wh = tmpDir("badts")
+    val rawPath = s"$wh/raw"
+    Seq(("O-1", "C-1", "delivered", "2024-07-01 10:00:00"),
+      ("O-2", "C-1", "delivered", "2024-07-01T11:00:00Z"))
+      .toDF("order_id", "customer_id", "order_status",
+        "order_purchase_timestamp")
+      .withColumn("order_approved_at", lit(null).cast("string"))
+      .withColumn("order_delivered_carrier_date", lit(null).cast("string"))
+      .withColumn("order_delivered_customer_date", lit(null).cast("string"))
+      .withColumn("order_estimated_delivery_date", lit(null).cast("string"))
+      .write.parquet(rawPath)
+    val p = new ChurnPipeline(spark, s"$wh/lake")
+    p.ingestBronze(rawPath, "r1")
+    // must not fail with CANNOT_PARSE_TIMESTAMP under ANSI
+    p.publishSilver("r2")
+    val silver = ParquetTable(spark, p.silverRoot).read
+      .select(col("order_id"),
+        date_format(col("order_purchase_ts"), "yyyy-MM-dd HH:mm:ss"))
+      .collect()
+    assert(silver.map(r => (r.getString(0), r.getString(1))).toSeq ==
+      Seq(("o-1", "2024-07-01 10:00:00")))
+    val invalid = spark.read.parquet(s"$wh/lake/quarantine/silver_invalid")
+      .select("order_id", "order_purchase_ts").collect()
+    assert(invalid.map(_.getString(0)).toSeq == Seq("o-2"))
+    assert(invalid(0).isNullAt(1))
+  }
+
   test("incremental gold equals the full rebuild for affected customers") {
     import spark.implicits._
     val wh = tmpDir("inc")

@@ -253,6 +253,182 @@ class ServingSpec extends AnyFunSuite with SparkSpec {
     } finally mismatched.stop()
   }
 
+  /** One raw keep-alive connection: requests go out as single writes and
+    * responses are read by their `Content-Length`, so a test sees exactly
+    * what the server sends and when.
+    */
+  private final class RawConn(port: Int) extends AutoCloseable {
+    private val socket = new java.net.Socket("127.0.0.1", port)
+    socket.setTcpNoDelay(true)
+    socket.setSoTimeout(10000)
+    private val in = new java.io.BufferedInputStream(socket.getInputStream)
+
+    def send(bytes: Array[Byte]): Unit = {
+      socket.getOutputStream.write(bytes)
+      socket.getOutputStream.flush()
+    }
+
+    def predict(body: String, key: String = "test-api-key"): Unit = {
+      val b = body.getBytes("UTF-8")
+      send((s"POST /v1/churn/predict HTTP/1.1\r\nHost: 127.0.0.1\r\n" +
+        s"X-API-Key: $key\r\nContent-Length: ${b.length}\r\n\r\n")
+        .getBytes("UTF-8") ++ b)
+    }
+
+    private def line(): String = {
+      val b = new java.io.ByteArrayOutputStream()
+      var c = in.read()
+      while (c != '\n') {
+        if (c < 0) throw new java.io.EOFException("connection closed")
+        if (c != '\r') b.write(c)
+        c = in.read()
+      }
+      b.toString("UTF-8")
+    }
+
+    /** (status, lower-cased headers, body) of the next response. */
+    def response(): (Int, Map[String, String], String) = {
+      val status = line().split(' ')(1).toInt
+      val headers = Iterator.continually(line()).takeWhile(_.nonEmpty)
+        .map { h =>
+          val i = h.indexOf(':')
+          h.take(i).trim.toLowerCase -> h.drop(i + 1).trim
+        }.toMap
+      val body = in.readNBytes(headers("content-length").toInt)
+      (status, headers, new String(body, "UTF-8"))
+    }
+
+    def close(): Unit = socket.close()
+  }
+
+  private def withServer(body: graft.serving.PredictServer => Unit): Unit = {
+    val (_, bundle, store) = ctx
+    val srv = new graft.serving.PredictServer(
+      spark, "test-api-key", Some(bundle), Some(store))
+    srv.start()
+    try body(srv) finally srv.stop()
+  }
+
+  test("HTTP: keep-alive predicts are not held back by a delayed ACK") {
+    withServer { srv =>
+      val conn = new RawConn(srv.boundPort)
+      try {
+        val nanos = (1 to 40).map { _ =>
+          val t0 = System.nanoTime()
+          conn.predict("""{"customer_id": "cust_0001"}""")
+          val (status, _, _) = conn.response()
+          assert(status == 200)
+          System.nanoTime() - t0
+        }.sorted
+        // with Nagle on at the server, each answer waits ~40 ms for the
+        // client's delayed ACK; with TCP_NODELAY it takes well under 1 ms
+        val medianMs = nanos(nanos.size / 2) / 1e6
+        assert(medianMs < 10.0, s"median keep-alive latency $medianMs ms")
+      } finally conn.close()
+    }
+  }
+
+  test("HTTP: oversized bodies get 413 and the server keeps answering") {
+    withServer { srv =>
+      val cap = graft.serving.PredictServer.MaxBodyBytes
+      val big = Array.fill[Byte](1 << 20)('x')
+      // the client keeps writing while the server answers unread and
+      // closes, so its writes may fail; only the answer matters
+      def oversized(head: String, body: Array[Byte]): (Int, String) = {
+        val conn = new RawConn(srv.boundPort)
+        try {
+          val writer = new Thread(() =>
+            try conn.send(head.getBytes("UTF-8") ++ body)
+            catch { case _: java.io.IOException => })
+          writer.start()
+          val (status, headers, text) = conn.response()
+          assert(headers("x-request-id") == "req-big")
+          writer.join(10000)
+          (status, text)
+        } finally conn.close()
+      }
+      val head = "POST /v1/churn/predict HTTP/1.1\r\nHost: 127.0.0.1\r\n" +
+        "X-API-Key: test-api-key\r\nX-Request-Id: req-big\r\n"
+      // declared over the cap: refused before the body is read
+      val (s1, b1) = oversized(
+        head + s"Content-Length: ${big.length}\r\n\r\n", big)
+      assert(s1 == 413)
+      assert(jsonField(b1, "detail")
+        .contains(s"Request body too large (max $cap bytes)."))
+      assert(jsonField(b1, "request_id").contains("req-big"))
+      // no declared length (one 1 MiB chunk): refused after cap + 1 bytes
+      val (s2, b2) = oversized(
+        head + "Transfer-Encoding: chunked\r\n\r\n",
+        s"${Integer.toHexString(big.length)}\r\n".getBytes("UTF-8") ++ big ++
+          "\r\n0\r\n\r\n".getBytes("UTF-8"))
+      assert(s2 == 413)
+      assert(jsonField(b2, "request_id").contains("req-big"))
+      assert(srv.counters.getOrElse("http_exception_413_total", 0L) == 2L)
+      // a body at the cap is read and parsed as usual
+      val padded = """{"customer_id": "cust_0001"}""".padTo(cap, ' ')
+      val (s3, _, b3) = http(srv.boundPort, "POST", "/v1/churn/predict",
+        headers = Map("X-API-Key" -> "test-api-key"), body = Some(padded))
+      assert(s3 == 200 && jsonField(b3, "customer_id").contains("cust_0001"))
+    }
+  }
+
+  test("HTTP: predict bodies are parsed strictly as one JSON object") {
+    withServer { srv =>
+      val conn = new RawConn(srv.boundPort)
+      try {
+        def refused(body: String, loc: String, msg: String): Unit = {
+          conn.predict(body)
+          val (status, _, text) = conn.response()
+          assert(status == 422, s"$body -> $status $text")
+          assert(jsonField(text, "detail").contains("Invalid request payload."))
+          assert(text.contains(
+            s""""errors": [{"loc": "$loc", "msg": "$msg"}]"""), text)
+        }
+        refused("""{"x": {"customer_id": "cust_0001"}}""",
+          "customer_id", "field required")
+        refused("""["cust_0001"]""", "body", "body must be a JSON object.")
+        refused(""""cust_0001"""", "body", "body must be a JSON object.")
+        refused("""{"customer_id": "cust_0001"""", "body",
+          "body is not valid JSON.")
+        refused("""{"customer_id": "cust_0001"} trailing""", "body",
+          "body is not valid JSON.")
+        refused("", "body", "body is not valid JSON.")
+        refused("""{"customer_id": 1}""", "customer_id",
+          "customer_id must be a string.")
+        refused("""{"customer_id": ["cust_0001"]}""", "customer_id",
+          "customer_id must be a string.")
+        // deep nesting inside the cap is refused, not a stack overflow
+        refused("[" * 60000, "body", "body is not valid JSON.")
+        assert(srv.counters.getOrElse("http_validation_errors_total", 0L) == 9L)
+        // the same connection still scores a well-formed body
+        conn.predict("""{"other": {"a": [1, 2]}, "customer_id": " cust_0001 "}""")
+        val (status, _, text) = conn.response()
+        assert(status == 200 && jsonField(text, "customer_id").contains("cust_0001"))
+      } finally conn.close()
+    }
+  }
+
+  test("stop() leaves no thread of the server's request pool alive") {
+    val (_, bundle, store) = ctx
+    val srv = new graft.serving.PredictServer(
+      spark, "test-api-key", Some(bundle), Some(store))
+    srv.start()
+    // concurrent requests make the pool start more than one thread
+    val clients = (1 to 4).map(_ => new RawConn(srv.boundPort))
+    clients.foreach(_.predict("""{"customer_id": "cust_0001"}"""))
+    clients.foreach(c => assert(c.response()._1 == 200))
+    def poolThreads = Thread.getAllStackTraces.keySet.toArray
+      .map(_.asInstanceOf[Thread])
+      .filter(_.getName.startsWith(srv.threadNamePrefix))
+    assert(poolThreads.nonEmpty)
+    srv.stop()
+    clients.foreach(_.close())
+    // a thread leaves the set a moment after its pool reports termination
+    poolThreads.foreach(_.join(10000))
+    assert(poolThreads.filter(_.isAlive).isEmpty,
+      poolThreads.map(_.getName).mkString(", "))
+  }
+
   test("unapproved model version refuses to load") {
     val (p, bundle, _) = ctx
     val dir = Files.createTempDirectory("bundle2").toString
