@@ -19,7 +19,12 @@ sealed trait DqCheck {
   def name: String
   def severity: String
   /** Aggregate expression counting violating rows (long). */
-  def failCount: Column
+  def failCount: Column = failCountWhere(lit(true))
+  /** Aggregate expression counting violating rows among the rows the
+    * boolean `rows` selects (long) — lets one aggregate check a subset
+    * of a frame beside other counts of the same scan.
+    */
+  def failCountWhere(rows: Column): Column
   /** Row-level predicate selecting violating rows, if expressible. */
   def failPredicate: Option[Column]
 }
@@ -29,7 +34,8 @@ final case class NotNull(cols: Seq[String], severity: String = "critical")
     extends DqCheck {
   val name = s"not_null_${cols.mkString("_")}"
   private val pred = cols.map(col(_).isNull).reduce(_ || _)
-  def failCount: Column = sum(when(pred, 1L).otherwise(0L)).cast("long")
+  def failCountWhere(rows: Column): Column =
+    sum(when(rows && pred, 1L).otherwise(0L)).cast("long")
   def failPredicate: Option[Column] = Some(pred)
 }
 
@@ -38,7 +44,8 @@ final case class InSet(c: String, allowed: Seq[String],
     severity: String = "critical") extends DqCheck {
   val name = s"in_set_$c"
   private val pred = col(c).isNull || !col(c).isin(allowed: _*)
-  def failCount: Column = sum(when(pred, 1L).otherwise(0L)).cast("long")
+  def failCountWhere(rows: Column): Column =
+    sum(when(rows && pred, 1L).otherwise(0L)).cast("long")
   def failPredicate: Option[Column] = Some(pred)
 }
 
@@ -48,8 +55,9 @@ final case class InSet(c: String, allowed: Seq[String],
 final case class UniqueKey(cols: Seq[String], severity: String = "critical")
     extends DqCheck {
   val name = s"unique_${cols.mkString("_")}"
-  def failCount: Column =
-    (count(lit(1)) - countDistinct(struct(cols.map(col): _*))).cast("long")
+  def failCountWhere(rows: Column): Column =
+    (count(when(rows, lit(1))) -
+      countDistinct(when(rows, struct(cols.map(col): _*)))).cast("long")
   def failPredicate: Option[Column] = None // needs a self-join; see failedKeys
 }
 
@@ -58,7 +66,8 @@ final case class UniqueKey(cols: Seq[String], severity: String = "critical")
   */
 final case class Predicate(name: String, violated: Column,
     severity: String = "critical") extends DqCheck {
-  def failCount: Column = sum(when(violated, 1L).otherwise(0L)).cast("long")
+  def failCountWhere(rows: Column): Column =
+    sum(when(rows && violated, 1L).otherwise(0L)).cast("long")
   def failPredicate: Option[Column] = Some(violated)
 }
 
@@ -67,7 +76,11 @@ final case class DqResult(
   def passed: Boolean = failedCount == 0L
 }
 
-final case class DqReport(results: Seq[DqResult]) {
+/** `rowCount`: the rows checked; `extra`: the values of the extra
+  * aggregates evaluated in the same pass (see [[DqRunner.run]]).
+  */
+final case class DqReport(results: Seq[DqResult], rowCount: Long,
+    extra: Seq[Long]) {
   def criticalFailures: Seq[DqResult] =
     results.filter(r => !r.passed && r.severity == "critical")
   def passed: Boolean = criticalFailures.isEmpty
@@ -86,15 +99,21 @@ object DqRunner {
       s"stack(${checks.size}, $stackArgs) as (check_name, n_failed)"))
   }
 
-  def run(df: DataFrame, checks: Seq[DqCheck]): DqReport = {
-    val row = df.agg(
-      checks.head.failCount.as("c0"),
-      checks.tail.zipWithIndex.map { case (c, i) =>
-        c.failCount.as(s"c${i + 1}")
-      }: _*).collect()(0)
+  /** All checks over the rows `rows` selects, in one aggregate that also
+    * counts those rows and evaluates the `extra` long aggregates over the
+    * whole frame (a caller's other counts of the same scan).
+    */
+  def run(df: DataFrame, checks: Seq[DqCheck], rows: Column = lit(true),
+      extra: Seq[Column] = Nil): DqReport = {
+    val aggs = checks.map(_.failCountWhere(rows)) ++
+      (count(when(rows, lit(1))) +: extra)
+    val row = df.agg(aggs.head.as("c0"), aggs.tail.zipWithIndex.map {
+      case (a, i) => a.as(s"c${i + 1}")
+    }: _*).collect()(0)
+    def long(i: Int): Long = if (row.isNullAt(i)) 0L else row.getLong(i)
     DqReport(checks.zipWithIndex.map { case (c, i) =>
-      DqResult(c.name, c.severity, if (row.isNullAt(i)) 0L else row.getLong(i))
-    })
+      DqResult(c.name, c.severity, long(i))
+    }, long(checks.size), extra.indices.map(i => long(checks.size + 1 + i)))
   }
 
   /** Bounded sample of violating rows for quarantine (dq.py:101-118). */

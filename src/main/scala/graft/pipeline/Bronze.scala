@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.common.Versioning
-import graft.tables.ParquetTable
+import graft.tables.{ParquetFooters, ParquetTable}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -54,10 +54,9 @@ object Bronze {
       auditRoot: String, runId: String): IngestResult = {
     val raw = spark.read.parquet(inputPath)
     validateSchema(raw)
-    val files = raw.inputFiles.toSeq.map { f =>
-      val p = java.nio.file.Paths.get(new java.net.URI(f).getPath)
-      (p.toString, java.nio.file.Files.size(p))
-    }
+    val paths = raw.inputFiles.toSeq.map(f =>
+      java.nio.file.Paths.get(new java.net.URI(f).getPath))
+    val files = paths.map(p => (p.toString, java.nio.file.Files.size(p)))
     val fp = fingerprint(files)
     val audit = ParquetTable(spark, auditRoot)
     val table = ParquetTable(spark, tableRoot)
@@ -90,7 +89,10 @@ object Bronze {
       }
     }
 
-    val rowCount = raw.count()
+    // the raw files' footers count their rows: no Spark job
+    val conf = spark.sparkContext.hadoopConfiguration
+    val rowCount = paths.map(p =>
+      ParquetFooters.rowCount(ParquetFooters.read(p, conf))).sum
     val stamped = raw
       .withColumn("run_id", lit(runId))
       .withColumn("ingest_ts", current_timestamp())

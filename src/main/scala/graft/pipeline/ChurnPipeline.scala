@@ -79,22 +79,13 @@ final class ChurnPipeline(spark: SparkSession, warehouse: String,
     */
   def publishSilver(runId: String): DataFrame = staged("silver", runId) {
     val bronze = ParquetTable(spark, bronzeRoot).read
-    val r = Silver.normalizeAndDedupe(bronze)
-    // each frame feeds several actions (probe + write + DQ + merge);
-    // persist once instead of re-running the normalize/dedupe plan per
-    // action, release before returning
-    val out = Silver.stamp(r.deduped, silverSchemaVersion, runId).persist()
-    val invalid = r.invalid.persist()
-    val dups = r.duplicateRejects.persist()
+    // every normalized row classified once (kept / invalid / duplicate)
+    // and persisted: the DQ aggregate, the quarantine and failed-check
+    // samples and the merge are all filters of it, released on return
+    val classified = Silver.classify(bronze).persist()
     try {
-
-    // quarantine: bounded samples, existence-probed like the reference
-    Seq("invalid" -> invalid, "duplicates" -> dups)
-      .foreach { case (kind, df) =>
-        if (df.limit(1).count() > 0)
-          df.limit(100).write.mode("overwrite")
-            .parquet(s"$warehouse/quarantine/silver_$kind")
-      }
+    val r = Silver.split(classified)
+    val out = Silver.stamp(r.deduped, silverSchemaVersion, runId)
 
     // checks come from the expectations FILE when one is configured
     // (reference `data/expectations/silver/orders.yml` — config, not
@@ -103,7 +94,24 @@ final class ChurnPipeline(spark: SparkSession, warehouse: String,
       NotNull(Seq("order_id", "customer_id", "order_purchase_ts")),
       UniqueKey(Seq("order_id")),
       InSet("order_status", Silver.AllowedStatuses)))
-    val report = DqRunner.run(out, checks)
+    // one aggregate over every classified row: the checks over the kept
+    // rows, plus the invalid and duplicate counts the quarantine needs
+    def is(c: String) = col(Silver.ClassCol) === c
+    val report = DqRunner.run(
+      Silver.stamp(classified, silverSchemaVersion, runId), checks,
+      rows = is(Silver.Kept),
+      extra = Seq(Silver.Invalid, Silver.Duplicate).map(c =>
+        count(when(is(c), lit(1)))))
+
+    // quarantine: bounded samples of the rejected rows, written only
+    // for a class that has any, like the reference
+    Seq("invalid" -> r.invalid, "duplicates" -> r.duplicateRejects)
+      .zip(report.extra).foreach { case ((kind, df), n) =>
+        if (n > 0)
+          df.limit(100).write.mode("overwrite")
+            .parquet(s"$warehouse/quarantine/silver_$kind")
+      }
+
     // per-check failed-row samples (reference dq.py:101-118: a <=100-row
     // parquet sample per failing check — the first thing an operator
     // debugging a DQ failure reaches for); written BEFORE the gate throws
@@ -129,21 +137,19 @@ final class ChurnPipeline(spark: SparkSession, warehouse: String,
     // logical plan: any caller action reads parquet instead of re-running
     // the normalize/dedupe DAG
     ParquetTable(spark, silverRoot).read
-    } finally {
-      invalid.unpersist(); dups.unpersist(); out.unpersist()
-    }
+    } finally classified.unpersist()
   }
 
   def publishGold(asOfDate: String, runId: String): DataFrame =
       staged("gold", runId, Map("as_of_date" -> asOfDate)) {
     val silver = ParquetTable(spark, silverRoot).read
     val snapshotId = Versioning.stableHash(s"$asOfDate|$featureVersion")
-    // quality collect + merge write + sidecar count all reuse one
-    // materialization of the feature plan
+    // the quality aggregate (which also counts the rows for the sidecar)
+    // and the merge write reuse one materialization of the feature plan
     val gold = Gold.buildFeatureSnapshot(
       silver, asOfDate, snapshotId, featureVersion, runId).persist()
     try {
-      Gold.assertQuality(gold)
+      val quality = Gold.assertQuality(gold)
       graft.contracts.Contracts.goldCustomerFeaturesDaily.enforce(gold)
       goldTable
         .merge(gold, keys = Seq("customer_id", "as_of_date"))
@@ -151,7 +157,7 @@ final class ChurnPipeline(spark: SparkSession, warehouse: String,
         s"$warehouse/_meta/gold_snapshot_$asOfDate.json",
         Map("run_id" -> runId, "as_of_date" -> asOfDate,
           "snapshot_id" -> snapshotId, "feature_version" -> featureVersion,
-          "row_count" -> gold.count()))
+          "row_count" -> quality.rowCount))
       // materialized snapshot slice, not the unpersisted plan
       ParquetTable(spark, goldRoot).read
         .filter(col("as_of_date") === to_date(lit(asOfDate)))
@@ -269,7 +275,8 @@ final class ChurnPipeline(spark: SparkSession, warehouse: String,
     val latest = gold.withColumn("_rn", row_number().over(w))
       .filter(col("_rn") === 1).drop("_rn")
     latest.write.mode("overwrite").parquet(latestFeaturesPath)
-    val exported = spark.read.parquet(latestFeaturesPath)
+    // read back under the schema just written: no inference job
+    val exported = spark.read.schema(latest.schema).parquet(latestFeaturesPath)
     val stats = exported.agg(count(lit(1)),
       max(col("as_of_date")).cast("string"),
       concat_ws(",", sort_array(collect_set(col("_feature_version")))))

@@ -60,9 +60,10 @@ object Gold {
   }
 
   /** Quality gate (`customer_features_daily.py:30-80`): nulls, duplicate
-    * keys, negative ranges, cross-column ordering. Throws on violation.
+    * keys, negative ranges, cross-column ordering. Throws on violation;
+    * else returns the report, whose `rowCount` counts the snapshot's rows.
     */
-  def assertQuality(df: DataFrame): Unit = {
+  def assertQuality(df: DataFrame): graft.dq.DqReport = {
     import graft.dq._
     val report = DqRunner.run(df, Seq(
       NotNull(Seq("customer_id", "as_of_date", "recency_days", "orders_30d",
@@ -81,5 +82,6 @@ object Gold {
     if (!report.passed)
       throw new IllegalStateException(
         s"gold quality gate failed: ${report.criticalFailures}")
+    report
   }
 }

@@ -10,9 +10,9 @@ import org.apache.spark.sql.functions._
   * keep-latest-per-order_id dedupe with a total tie-break chain.
   *
   * Scale: the only shuffle is the dedupe window's hash partition on
-  * order_id; the invalid/clean split is two predicates over one scan
-  * (Catalyst shares it), and the window's per-partition sort is bounded by
-  * per-key duplicate counts.
+  * (order_id, valid); the invalid/kept/duplicate split is one class
+  * column over one scan, and the window's per-partition sort is bounded
+  * by per-key duplicate counts.
   */
 object Silver {
 
@@ -31,11 +31,23 @@ object Silver {
   final case class NormalizeResult(
       deduped: DataFrame, invalid: DataFrame, duplicateRejects: DataFrame)
 
-  /** P1 projection + P2/P3 split + W1 dedupe. Column contract matches the
-    * reference's silver layer exactly.
+  /** The class column [[classify]] adds: one of [[Kept]], [[Invalid]],
+    * [[Duplicate]].
     */
-  def normalizeAndDedupe(bronze: DataFrame,
-      allowedStatuses: Seq[String] = AllowedStatuses): NormalizeResult = {
+  val ClassCol = "_silver_class"
+  val Kept = "kept"
+  val Invalid = "invalid"
+  val Duplicate = "duplicate"
+
+  /** P1 projection, then every normalized row classified in one pass: P2/P3
+    * invalid (a null key, timestamp or status, or a status outside the
+    * allowed set), else W1 keep-latest per order_id (kept) or an older
+    * copy (duplicate). Valid rows are ranked only against valid rows: the
+    * window partitions on (order_id, valid), so the dedupe is defined here
+    * once and the invalid rows ride the same exchange.
+    */
+  def classify(bronze: DataFrame,
+      allowedStatuses: Seq[String] = AllowedStatuses): DataFrame = {
     val normalized = bronze.select(
       lower(trim(col("order_id"))).as("order_id"),
       lower(trim(col("customer_id"))).as("customer_id"),
@@ -50,29 +62,30 @@ object Silver {
       col("source_fingerprint").as("_bronze_source_fingerprint"),
       col("schema_hash").as("_bronze_schema_hash"))
 
-    val invalid = normalized.filter(
-      col("order_id").isNull || col("customer_id").isNull ||
-        col("order_purchase_ts").isNull || col("order_status").isNull ||
-        !col("order_status").isin(allowedStatuses: _*))
-
-    val clean = normalized.filter(
+    val valid =
       col("order_id").isNotNull && col("customer_id").isNotNull &&
         col("order_purchase_ts").isNotNull && col("order_status").isNotNull &&
-        col("order_status").isin(allowedStatuses: _*))
+        col("order_status").isin(allowedStatuses: _*)
 
     // keep-latest with a TOTAL tie-break chain — byte-stable reruns
     // (SURVEY.md §4.3 determinism discipline)
-    val w = Window.partitionBy("order_id").orderBy(
+    val w = Window.partitionBy(col("order_id"), valid).orderBy(
       col("order_purchase_ts").desc_nulls_last,
       col("_bronze_ingest_ts").desc_nulls_last,
       col("_bronze_source_file").desc_nulls_last,
       col("_bronze_run_id").desc_nulls_last)
-    val ranked = clean.withColumn("_row_num", row_number().over(w))
+    normalized.withColumn(ClassCol,
+      when(!valid, lit(Invalid))
+        .when(row_number().over(w) === 1, lit(Kept))
+        .otherwise(lit(Duplicate)))
+  }
 
-    NormalizeResult(
-      deduped = ranked.filter(col("_row_num") === 1).drop("_row_num"),
-      invalid = invalid,
-      duplicateRejects = ranked.filter(col("_row_num") > 1).drop("_row_num"))
+  /** The three row sets of a [[classify]]d frame, class column dropped.
+    * Column contract matches the reference's silver layer exactly.
+    */
+  def split(classified: DataFrame): NormalizeResult = {
+    def only(c: String) = classified.filter(col(ClassCol) === c).drop(ClassCol)
+    NormalizeResult(only(Kept), only(Invalid), only(Duplicate))
   }
 
   /** Lineage stamps for the publish (`orders_bronze_to_silver.py:145-160`). */

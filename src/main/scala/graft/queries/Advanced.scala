@@ -277,6 +277,7 @@ object Advanced {
         .groupBy(col("grp"), bucketCol.as("cb"))
         .agg(count(lit(1)).as("c"),
           sum(col("v").cast("decimal(38,0)")).as("m"))
+        .limit(500001)
         .collect()
       require(coarse.length <= 500000,
         s"q224 coarse histogram ${coarse.length} cells - price domain " +
@@ -522,6 +523,7 @@ object Advanced {
       val coarse = src
         .groupBy(col("mode"), bucketCol.as("cb"))
         .agg(sum(col("w")).as("cwv"))
+        .limit(500001)
         .collect()
       require(coarse.length <= 500000,
         s"q247 coarse histogram ${coarse.length} cells - price domain " +

@@ -232,7 +232,7 @@ object Attribution {
       // DataFrame loop spent ~2.5 s in Catalyst planning alone to move
       // ≤180 rows). Identical integer semantics: all counts and values
       // are non-negative i64, so Scala `/` equals Spark's `div`.
-      val mat = trans.collect().map { r =>
+      val mat = trans.limit(10001).collect().map { r =>
         (r.getString(0), r.getString(1), r.getLong(2))
       }
       require(mat.length <= 10000,

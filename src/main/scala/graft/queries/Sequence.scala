@@ -213,7 +213,7 @@ object Sequence {
       // the query's planning time to move ≤36 rows). Identical integer
       // semantics: counts and π values are non-negative i64, so Scala
       // `/` equals Spark's `div`.
-      val mat = pairs.collect().map { r =>
+      val mat = pairs.limit(10001).collect().map { r =>
         (r.getString(0), r.getString(1), r.getLong(2))
       }
       require(mat.length <= 10000,

@@ -2,8 +2,9 @@ package graft.tables
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, count, count_distinct, input_file_name, lit, max, min, struct}
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /** Versioned manifest-based Parquet table: the engine's replacement for
   * the reference's Delta Lake layer (reference uses Delta append /
@@ -31,10 +32,14 @@ import org.apache.spark.sql.functions.{col, count, count_distinct, input_file_na
   * reference — Delta's copy-on-write file pruning.
   *
   * Data skipping: when `statsColumns` is non-empty, every write records
-  * per-file min/max for those columns in the manifest (one O(batch) scan
-  * of the just-written files — Delta's per-file stats collection, which
-  * is what makes the reference's MERGE
-  * (`orders_bronze_to_silver.py:184-192`) skip files). `merge` intersects
+  * per-file min/max for those columns in the manifest, taken from the
+  * row-group statistics in the new files' parquet footers (read by the
+  * writing JVM, no Spark job) — Delta's per-file stats, which are what
+  * make the reference's MERGE (`orders_bronze_to_silver.py:184-192`)
+  * skip files. Ranges are recorded for string, integral and date
+  * columns; any other type, or a footer without a usable min/max,
+  * records none. The same footers give each file's row count, and a
+  * write leaves its 0-row files out of the manifest. `merge` intersects
   * the source's key bounds with each file's recorded range and runs the
   * touched-file discovery scan only over files whose range overlaps — a
   * merge of one day's keys against a year's table reads one day's files,
@@ -42,6 +47,10 @@ import org.apache.spark.sql.functions.{col, count, count_distinct, input_file_na
   * handle without `statsColumns`) have no recorded range and are always
   * scan candidates, so old manifests stay readable and pruning is purely
   * an over-approximation of the touched set — never a correctness risk.
+  *
+  * Reads pass the version's recorded schema to Spark, so a read starts
+  * no Spark job; only manifests written before types were recorded still
+  * infer their schema from the files.
   *
   * Crash safety: data dirs and manifests are invisible until the
   * `_LATEST` pointer flips (rename is atomic on POSIX); re-runs are
@@ -146,35 +155,55 @@ final class ParquetTable(spark: SparkSession, root: String,
       throw new IllegalStateException(s"table $root does not exist")
     require(committedVersions.contains(v),
       s"version $v is not committed (committed=${committedVersions.toSeq.sorted})")
-    val df = readEntries(readManifest(v))
     // the manifest's recorded schema pins the column order, the logical
     // names (rename mapping), and the recorded types (widened columns
     // cast up) — and, for time travel, the version's OWN schema: a
     // version written before a column was added/renamed/widened reads
     // under its own names and types
-    manifestSchema(v) match {
-      case Some(specs) => toLogical(df, specs)
-      case None => df // pre-round-15 manifest: schema = union of its files
-    }
+    val specs = manifestSchema(v)
+    val df = readEntries(readManifest(v), specs)
+    specs.fold(df)(toLogical(df, _)) // pre-round-15: union of its files
   }
 
-  /** One union branch per data dir so Spark's partition discovery (the
-    * `k=v` path inference for `partitionBy` writes) gets a correct
-    * basePath per branch; filters push into every branch, so partition
-    * pruning survives the union. `allowMissingColumns` is the read half
-    * of additive schema evolution (round-15): data dirs written before
-    * a column existed union in with nulls for it, exactly Delta's
-    * mergeSchema read semantics; for a non-evolved table it is a no-op.
+  /** The PHYSICAL frame of `entries`: one union branch per data dir, so
+    * Spark's partition discovery (the `k=v` path inference for
+    * `partitionBy` writes) gets a correct basePath per branch; filters
+    * push into every branch, so partition pruning survives the union.
+    * With a recorded schema whose types are all known, each branch is
+    * given that schema, so Spark runs no schema-inference job. A branch
+    * leaves out only the partition columns its own files carry in their
+    * paths: Spark types those from the paths (`toLogical` casts them to
+    * the recorded type), while a flat dir of the same table (a compacted
+    * one) reads them from its files. A column a file lacks (written
+    * before an additive evolution) reads as nulls, and a narrow file
+    * column reads up to its widened recorded type; a version with no
+    * files is an empty frame of the recorded schema. Legacy manifests
+    * (no `#types`) infer per data dir and union with
+    * `allowMissingColumns` — Delta's mergeSchema read semantics.
     */
-  private def readEntries(entries: Seq[Entry]): DataFrame = {
-    val frames = entries.collect { case (dir, files) if files.nonEmpty =>
-      val base = dataDir.resolve(dir).toString
-      spark.read.option("basePath", base)
-        .parquet(files.map(f => s"$base/$f"): _*)
+  private def readEntries(entries: Seq[Entry],
+      specs: Option[Seq[ColSpec]]): DataFrame = {
+    val typed = specs.filter(_.forall(_.tpe.isDefined))
+    def schemaOf(files: Seq[String]): Option[StructType] = typed.map { sp =>
+      val partCols = files
+        .flatMap(_.split('/').init.map(_.takeWhile(_ != '='))).toSet
+      StructType(sp.filterNot(s => partCols(s.phys))
+        .map(s => StructField(s.phys, s.tpe.get)))
     }
-    if (frames.isEmpty)
-      throw new IllegalStateException(s"table $root: version has no data files")
-    frames.reduce(_.unionByName(_, allowMissingColumns = true))
+    val frames = entries.collect { case (dir, files) if files.nonEmpty =>
+      val base = dataDir.resolve(dir)
+      val reader = spark.read.option("basePath", base.toString)
+      schemaOf(files).fold(reader)(reader.schema)
+        .parquet(files.map(f => base.resolve(f).toString): _*)
+    }
+    if (frames.nonEmpty)
+      frames.reduce(_.unionByName(_, allowMissingColumns = typed.isEmpty))
+    else schemaOf(Nil) match {
+      case Some(schema) =>
+        spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+      case None =>
+        throw new IllegalStateException(s"table $root: version has no data files")
+    }
   }
 
   private def readManifest(v: Long): Seq[Entry] = {
@@ -247,7 +276,7 @@ final class ParquetTable(spark: SparkSession, root: String,
     */
   private def tableSpecs(v: Long): Seq[ColSpec] =
     manifestSchema(v).getOrElse(
-      readEntries(readManifest(v)).schema.fields.toSeq
+      readEntries(readManifest(v), None).schema.fields.toSeq
         .map(f => ColSpec(f.name, f.name, None)))
 
   /** Version v's logical column list. */
@@ -680,6 +709,15 @@ final class ParquetTable(spark: SparkSession, root: String,
     * columns. The write mode is append because the reservation already
     * created the (empty, exclusively ours) directory — Spark's
     * errorifexists would refuse it.
+    *
+    * The new files' parquet footers, read without a Spark job, supply
+    * both: files whose footers count 0 rows stay out of the entry (they hold
+    * no key, so no merge would ever rewrite them away), and each file's
+    * stats record is the range of its row-group statistics. A column
+    * with no usable range in a file (all-null, another type, a value
+    * over parquet's 4 KiB statistics limit) is omitted from that file's
+    * record — omission means "unknown", i.e. the file is always a scan
+    * candidate for that column.
     */
   private def writeData(df: DataFrame, partitionBy: Seq[String],
       from: Long): (Long, Entry, Map[String, String]) = {
@@ -689,38 +727,17 @@ final class ParquetTable(spark: SparkSession, root: String,
     val w = df.write.mode("append")
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
       .parquet(abs.toString)
-    (v, dir -> listParquet(abs), collectStats(abs, dir))
-  }
-
-  /** One scan of the just-written data dir → per-file min/max of the
-    * declared stats columns (Delta-style stats collection: O(batch), paid
-    * once at write time so every later merge can skip files). A column
-    * that is all-null in a file is omitted from that file's record —
-    * omission means "unknown", i.e. the file is always a scan candidate
-    * for that column.
-    */
-  private def collectStats(abs: Path, dir: String): Map[String, String] = {
-    if (statsColumns.isEmpty) return Map.empty
-    val df = spark.read.option("basePath", abs.toString)
-      .parquet(abs.toString)
-    val present = statsColumns.filter(df.columns.contains)
-    if (present.isEmpty) return Map.empty
-    val types = present.map(c => c -> df.schema(c).dataType.typeName).toMap
-    val aggs = present.flatMap(c => Seq(
-      min(col(c)).cast("string"), max(col(c)).cast("string")))
-    val rows = df.groupBy(input_file_name().as("__f"))
-      .agg(aggs.head, aggs.tail: _*).collect()
-    rows.flatMap { r =>
-      val rel = abs.relativize(
-        Paths.get(new java.net.URI(r.getString(0)).getPath)).toString
-      val cols = present.zipWithIndex.flatMap { case (c, i) =>
-        val mn = r.getString(1 + 2 * i)
-        val mx = r.getString(2 + 2 * i)
-        if (mn == null || mx == null) None
-        else Some((c, types(c), mn, mx))
-      }
-      if (cols.isEmpty) None else Some(s"$dir/$rel" -> renderStats(cols))
+    val conf = spark.sparkContext.hadoopConfiguration
+    val files = listParquet(abs)
+      .map(f => f -> ParquetFooters.read(abs.resolve(f), conf))
+      .filter { case (_, md) => ParquetFooters.rowCount(md) > 0 }
+    val typed = statsColumns.flatMap(c => df.schema.find(_.name == c))
+    val stats = files.flatMap { case (f, md) =>
+      val cols = typed.flatMap(t => ParquetFooters.range(md, t.name, t.dataType)
+        .map { case (lo, hi) => (t.name, t.dataType.typeName, lo, hi) })
+      if (cols.isEmpty) None else Some(s"$dir/$f" -> renderStats(cols))
     }.toMap
+    (v, dir -> files.map(_._1), stats)
   }
 
   private def renderStats(
@@ -1169,7 +1186,7 @@ final class ParquetTable(spark: SparkSession, root: String,
           files.map(f => s"$dir/$f")
         }
         if (candidates.isEmpty) read.limit(0).filter(pred)
-        else toLogical(readEntries(candidates), specs).filter(pred)
+        else toLogical(readEntries(candidates, Some(specs)), specs).filter(pred)
     }
   }
 
@@ -1212,7 +1229,8 @@ final class ParquetTable(spark: SparkSession, root: String,
           d -> fs.filterNot(f => victims.contains(s"$d/$f"))
         }.filter(_._2.nonEmpty))
       if (victimEntries.isEmpty) return None
-      val rows = readEntries(victimEntries)
+      val specs = tableSpecs(cur)
+      val rows = readEntries(victimEntries, Some(specs))
       val folded =
         if (partitionBy.isEmpty) rows
         else rows.repartition(partitionBy.map(col): _*)
@@ -1225,7 +1243,7 @@ final class ParquetTable(spark: SparkSession, root: String,
       // verbatim), so the schema-of-record is carried unchanged
       tryCommit(Some(cur), v0, keptEntries :+ entry,
         readStatsMap(cur).view.filterKeys(keptFiles.contains).toMap
-          ++ newStats, tableSpecs(cur), op = "replace") match {
+          ++ newStats, specs, op = "replace") match {
         case Some(v) => return Some(v)
         case None => // victim set may be stale — re-derive from the winner
           lastConflicts += 1
@@ -1260,13 +1278,20 @@ final class ParquetTable(spark: SparkSession, root: String,
   def merge(source: DataFrame, keys: Seq[String],
       partitionBy: Seq[String] = Nil, mergeSchema: Boolean = false): Long = {
     val keyCols = keys.map(col)
-    val dupStats = source.agg(
-      count(lit(1)).as("n"),
-      count_distinct(struct(keyCols: _*)).as("d")).collect()(0)
-    require(dupStats.getLong(0) == dupStats.getLong(1),
+    // one aggregate over the source: the duplicate-key check and the
+    // key bounds that data skipping intersects with the file ranges
+    val head = source.agg(count(lit(1)), count_distinct(struct(keyCols: _*))
+      +: keys.flatMap(k => Seq(min(col(k)).cast("string"),
+        max(col(k)).cast("string"))): _*).collect()(0)
+    require(head.getLong(0) == head.getLong(1),
       s"merge source has duplicate keys on ${keys.mkString(",")} " +
-        s"(${dupStats.getLong(0)} rows, ${dupStats.getLong(1)} distinct) — " +
+        s"(${head.getLong(0)} rows, ${head.getLong(1)} distinct) — " +
         "Delta MERGE parity: multiple source matches are an error")
+    val srcBounds: Seq[(String, (String, String))] =
+      keys.zipWithIndex.flatMap { case (k, i) =>
+        Option(head.getString(2 + 2 * i))
+          .zip(Option(head.getString(3 + 2 * i))).map(k -> _)
+      }
     lastConflicts = 0
     var attempt = 0
     while (true) {
@@ -1285,13 +1310,15 @@ final class ParquetTable(spark: SparkSession, root: String,
           // reference and read null (or cast up) for the evolution;
           // surviving rows of touched files get null via the
           // missing-tolerant logical mapping
-          val specs = evolveSchema(tableSpecs(cur), source,
-            mergeSchema, "merge")
+          val curSpecs = tableSpecs(cur)
+          val specs = evolveSchema(curSpecs, source, mergeSchema, "merge")
           val entries = readManifest(cur)
           val priorStats = readStatsMap(cur)
           val srcKeys = source.select(keyCols: _*).distinct()
-          val candidates = pruneByStats(entries, priorStats, source, keys,
-            physOf(specs, _))
+          // bounds come off the LOGICAL source; stats records are keyed
+          // by the PHYSICAL column name the file was written under
+          val candidates = pruneByBounds(entries, priorStats,
+            srcBounds.map { case (k, b) => physOf(specs, k) -> b }.toMap)
           lastScanned = candidates.flatMap { case (dir, files) =>
             files.map(f => s"$dir/$f")
           }
@@ -1299,7 +1326,7 @@ final class ParquetTable(spark: SparkSession, root: String,
           // their physical names, aliased back to logical for the join
           val touched: Set[String] =
             if (candidates.isEmpty) Set.empty
-            else readEntries(candidates)
+            else readEntries(candidates, Some(curSpecs))
               .select(keys.map(k => col(physOf(specs, k)).as(k)) :+
                 input_file_name().as("__graft_file"): _*)
               .join(srcKeys, keys, "left_semi")
@@ -1312,7 +1339,7 @@ final class ParquetTable(spark: SparkSession, root: String,
           // null for newer columns) and written back PHYSICAL
           val survivors =
             if (touchedEntries.forall(_._2.isEmpty)) source
-            else toLogical(readEntries(touchedEntries), specs)
+            else toLogical(readEntries(touchedEntries, Some(curSpecs)), specs)
               .join(srcKeys, keys, "left_anti")
               .unionByName(source, allowMissingColumns = true)
           val (v0, entry, newStats) = writeData(
@@ -1375,13 +1402,13 @@ final class ParquetTable(spark: SparkSession, root: String,
       val entries = readManifest(cur)
       // the condition addresses LOGICAL names; both scans map through
       // the schema-of-record (rename aliasing + widening casts)
-      val touched: Set[String] = toLogical(readEntries(entries), specs)
+      val touched: Set[String] = toLogical(readEntries(entries, Some(specs)), specs)
         .filter(condition)
         .select(input_file_name().as("__graft_file"))
         .distinct().collect().map(r => baseName(r.getString(0))).toSet
       if (touched.isEmpty) return None
       val (touchedEntries, keptEntries) = splitEntries(entries, touched)
-      val survivors = toLogical(readEntries(touchedEntries), specs)
+      val survivors = toLogical(readEntries(touchedEntries, Some(specs)), specs)
         .filter(!org.apache.spark.sql.functions.coalesce(
           condition, lit(false)))
       val (v0, entry, newStats) = writeData(toPhysical(survivors, specs),
@@ -1430,40 +1457,16 @@ final class ParquetTable(spark: SparkSession, root: String,
       }.filter(_._2.nonEmpty)
       // each side reads under ITS OWN version's logical schema, so the
       // keyed diff joins logical names even across a rename boundary
-      if (sub.nonEmpty) manifestSchema(v) match {
-        case Some(specs) => toLogical(readEntries(sub), specs)
-        case None => readEntries(sub)
+      if (sub.nonEmpty) {
+        val specs = manifestSchema(v)
+        val df = readEntries(sub, specs)
+        specs.fold(df)(toLogical(df, _))
       }
       else readVersion(v).where(lit(false)) // schema-only empty frame
     }
     val (f1, f2) = (files(v1), files(v2))
     graft.operators.ChangeFeed.snapshotDiff(
       restrict(v1, f1 -- f2), restrict(v2, f2 -- f1), keys, compare)
-  }
-
-  /** Entries restricted to files whose recorded key ranges can overlap
-    * the source's key bounds (one tiny agg over the source for the
-    * bounds). A file with no stats record — or a column type whose
-    * string-cast ordering isn't trustworthy — is always a candidate;
-    * pruning only ever over-approximates the touched set.
-    */
-  private def pruneByStats(entries: Seq[Entry], stats: Map[String, String],
-      source: DataFrame, keys: Seq[String],
-      statsKeyOf: String => String = identity): Seq[Entry] = {
-    if (stats.isEmpty) return entries
-    val aggs = keys.flatMap(k =>
-      Seq(min(col(k)).cast("string"), max(col(k)).cast("string")))
-    val row = source.agg(aggs.head, aggs.tail: _*).collect()(0)
-    // bounds come off the LOGICAL source; stats records are keyed by
-    // the PHYSICAL column name the file was written under
-    val bounds: Map[String, (String, String)] = keys.zipWithIndex.flatMap {
-      case (k, i) =>
-        val mn = row.getString(2 * i)
-        val mx = row.getString(2 * i + 1)
-        if (mn == null || mx == null) None
-        else Some(statsKeyOf(k) -> ((mn, mx)))
-    }.toMap
-    pruneByBounds(entries, stats, bounds)
   }
 
   /** Entries restricted to files whose recorded ranges can overlap the

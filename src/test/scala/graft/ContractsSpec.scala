@@ -21,7 +21,7 @@ class ContractsSpec extends AnyFunSuite with SparkSpec {
         "source_fingerprint", "schema_hash")
       .withColumn("ingest_ts", to_timestamp(col("ingest_ts")))
     val out = Silver.stamp(
-      Silver.normalizeAndDedupe(bronze).deduped, "sv", "run")
+      Silver.split(Silver.classify(bronze)).deduped, "sv", "run")
     assert(Contracts.silverOrders.validate(out) == Nil)
   }
 

@@ -31,7 +31,7 @@ class PipelineSpec extends AnyFunSuite with SparkSpec {
         "source_fingerprint", "schema_hash")
       .withColumn("ingest_ts", to_timestamp(col("ingest_ts")))
 
-    val r = Silver.normalizeAndDedupe(bronze)
+    val r = Silver.split(Silver.classify(bronze))
     assert(r.deduped.count() == 1)
     assert(r.invalid.count() == 1)
     assert(r.duplicateRejects.count() == 1)
@@ -322,6 +322,102 @@ class PipelineSpec extends AnyFunSuite with SparkSpec {
     // CUST_0001 (its A2 order), leaving others' rows from the full run
     val inc2 = p.publishGoldIncremental("2025-03-31", "inc2", "2025-03-01 00:00:00")
     assert(inc2.count() == full.count()) // merge preserved everyone
+  }
+
+  /** Runs `body` and counts the Spark jobs it started. Listener events
+    * arrive asynchronously but in order, so a marker job run afterwards
+    * (in a job group of its own) is seen only after every earlier job.
+    */
+  private def jobsOf[A](body: => A): (A, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val marker = s"job-count-marker-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val seen = new java.util.concurrent.CountDownLatch(1)
+    val sc = spark.sparkContext
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == marker))
+          seen.countDown()
+        else if (seen.getCount > 0) jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val a = body
+      sc.setJobGroup(marker, "job count marker")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.clearJobGroup()
+      assert(seen.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the marker job never reached the listener")
+      (a, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** A raw orders batch in the source contract: `(order_id, customer_id,
+    * status, purchase timestamp)` rows, the delivery columns null.
+    */
+  private def writeRaw(rows: Seq[(String, String, String, String)],
+      path: String): Unit = {
+    import spark.implicits._
+    rows.toDF("order_id", "customer_id", "order_status",
+        "order_purchase_timestamp")
+      .withColumn("order_approved_at", lit(null).cast("string"))
+      .withColumn("order_delivered_carrier_date", lit(null).cast("string"))
+      .withColumn("order_delivered_customer_date", lit(null).cast("string"))
+      .withColumn("order_estimated_delivery_date", lit(null).cast("string"))
+      .coalesce(1).write.parquet(path)
+  }
+
+  test("a day's refresh starts a fixed number of Spark jobs; table reads start none") {
+    val wh = tmpDir("jobs")
+    val p = new ChurnPipeline(spark, s"$wh/lake")
+    val start = java.time.LocalDate.parse("2024-01-01")
+    def ts(d: java.time.LocalDate, h: Int) = f"$d ${h % 24}%02d:00:00"
+    // backfill: 120 days of orders for 8 customers, one invalid row and
+    // one order sent twice with a later status
+    val history = (0 until 120).flatMap { i =>
+      val d = start.plusDays(i.toLong)
+      Seq((s"H$i", s"C${i % 8}", "delivered", ts(d, 10)))
+    } ++ Seq(("H0", "C0", "shipped", ts(start, 9)),
+      ("BAD", null, "delivered", ts(start, 11)))
+    writeRaw(history, s"$wh/raw/backfill")
+    p.ingestBronze(s"$wh/raw/backfill", "backfill")
+    p.publishSilver("backfill")
+    p.publishGold("2024-01-31", "backfill")
+    p.publishLabels("2024-01-31", "backfill")
+    p.exportLatestFeatures("backfill")
+    // one day: a new order, a re-sent older order, an invalid row, and
+    // the five calls of the daily refresh
+    def day(n: Int): Int = {
+      val d = start.plusDays(119L + n)
+      val path = s"$wh/raw/day$n"
+      writeRaw(Seq((s"D$n", s"C${n % 8}", "delivered", ts(d, 12)),
+        (s"H${100 + n}", s"C${(100 + n) % 8}", "canceled",
+          ts(start.plusDays(100L + n), 10)),
+        (s"X$n", s"C$n", "bogus", ts(d, 13))), path)
+      jobsOf {
+        p.ingestBronze(path, s"day$n")
+        p.publishSilver(s"day$n")
+        p.publishGold(d.toString, s"day$n")
+        p.publishLabels(d.minusDays(60).toString, s"day$n")
+        p.exportLatestFeatures(s"day$n")
+      }._2
+    }
+    val counts = (1 to 5).map(day)
+    info(s"jobs per day: ${counts.mkString(", ")}")
+    // the cost of a day does not grow with the commits before it
+    assert(counts(1) == counts(4), s"jobs per day: $counts")
+    // pinned ceiling: 53 in a traced benchmark day, 90-98 before table
+    // reads took their schema from the manifest and stats from footers
+    assert(counts.forall(_ <= 55), s"jobs per day: $counts")
+    // a table read is planning only: the recorded schema, no inference
+    Seq(p.bronzeRoot, p.auditRoot, p.silverRoot, p.goldRoot, p.labelsRoot)
+      .foreach { root =>
+        val t = ParquetTable(spark, root)
+        assert(jobsOf(t.read)._2 == 0, s"read of $root started a job")
+        val first = t.history.map(_.version).min
+        assert(jobsOf(t.readVersion(first))._2 == 0,
+          s"readVersion($first) of $root started a job")
+      }
   }
 
   // --- e2e slice (reference tests/integration/test_slice_e2e.py in-JVM) ---

@@ -193,4 +193,132 @@ class TableStatsSpec extends AnyFunSuite with SparkSpec {
     assert(t.replaceFiles(Set("vX/doesnotexist.parquet"),
       partitionBy = Seq("p")).isEmpty)
   }
+
+  /** "dir/file" -> (col -> (type, min, max)) from version v's manifest. */
+  private def manifestStats(t: ParquetTable,
+      v: Long): Map[String, Map[String, (String, String, String)]] = {
+    import graft.common.Json
+    Files.readAllLines(java.nio.file.Paths.get(t.rootPath, "m", s"v=$v.manifest"))
+      .toArray(Array.empty[String]).toSeq
+      .filter(l => l.nonEmpty && !l.startsWith("#")).map(_.split("\t", 3))
+      .map { f =>
+        val ranges = if (f.length < 3) Map.empty[String, (String, String, String)]
+          else Json.obj(Json.parse(f(2))).map { case (c, r) =>
+            val Seq(tpe, lo, hi) = Json.arr(r).map(Json.str)
+            c -> ((tpe, lo, hi))
+          }
+        s"${f(0)}/${f(1)}" -> ranges
+      }.toMap
+  }
+
+  test("footer stats are never narrower than a Spark min/max oracle") {
+    import spark.implicits._
+    val big = "z" * 5000 // over parquet's 4 KiB statistics limit
+    // four files: mixed values with nulls; non-ASCII strings; an
+    // all-null file; and one file holding a >4 KiB string
+    val rows = spark.sparkContext.parallelize((0 until 3000).sortBy(_ % 4).map { i =>
+      val f = i % 4
+      val s = f match {
+        case 0 => if (i % 7 == 0) null else f"k$i%05d"
+        case 1 => Seq("\u00e9t\u00e9", "\u4e2d\u6587", "\ud83d\ude00", "Zebra")(i % 4) + i
+        case 2 => null
+        case _ => if (i == 3) big else f"m$i%05d"
+      }
+      def opt[A](a: A): Option[A] = if (f == 2 || i % 5 == 0) None else Some(a)
+      (f, s, opt(i - 1500), opt(i.toLong * 1000000007L - 7L),
+        opt(java.sql.Date.valueOf(java.time.LocalDate.of(2024, 1, 1)
+          .plusDays((i * 37 % 400).toLong))))
+    }, 4).toDF("f", "s", "i", "l", "d") // one slice per file shape
+    val root = s"${tmp()}/t"
+    val t = ParquetTable(spark, root, Seq("s", "i", "l", "d"))
+    // small row groups, so each file's stats span several of them
+    spark.conf.set("parquet.block.size", "4096")
+    try t.overwrite(rows.drop("f"))
+    finally spark.conf.unset("parquet.block.size")
+    val v = t.latestVersion.get
+    val stats = manifestStats(t, v)
+    val dataRoot = java.nio.file.Paths.get(root, "d")
+    val conf = spark.sparkContext.hadoopConfiguration
+    assert(t.currentFiles.exists(f => graft.tables.ParquetFooters
+      .read(java.nio.file.Paths.get(f), conf).getBlocks.size > 1),
+      "no file has more than one row group")
+    assert(stats.size == t.currentFiles.size)
+    var recorded = 0
+    t.currentFiles.foreach { abs =>
+      val key = dataRoot.relativize(java.nio.file.Paths.get(abs)).toString
+      val oracle = spark.read.parquet(abs).agg(
+        min("s"), max("s"), min("i"), max("i"), min("l"), max("l"),
+        min("d"), max("d")).collect()(0)
+      Seq("s", "i", "l", "d").zipWithIndex.foreach { case (c, j) =>
+        val (lo, hi) = (oracle.get(2 * j), oracle.get(2 * j + 1))
+        stats(key).get(c) match {
+          case None => // unknown: always a scan candidate
+          case Some((tpe, rLo, rHi)) =>
+            recorded += 1
+            assert(lo != null, s"$key: range recorded for all-null $c")
+            def le(a: String, b: String): Boolean = tpe match {
+              case "string" => java.util.Arrays.compareUnsigned(
+                a.getBytes("UTF-8"), b.getBytes("UTF-8")) <= 0
+              case "integer" | "long" => a.toLong <= b.toLong
+              case "date" => a <= b
+            }
+            assert(le(rLo, lo.toString) && le(hi.toString, rHi),
+              s"$key.$c: recorded [$rLo, $rHi] narrower than [$lo, $hi]")
+        }
+      }
+    }
+    // the int, long and date ranges of the three files with values
+    assert(recorded >= 9, s"only $recorded ranges recorded: $stats")
+  }
+
+  test("no manifest lists a 0-row file; an all-deleted table reads empty") {
+    // range partitions 0 and 1 hold no rows after the filter, and Spark
+    // writes a file for task 0 even when it is empty
+    def batch(lo: Long) = spark.range(lo, lo + 100, 1, 4)
+      .filter(col("id") >= lo + 50).select(col("id").as("k"),
+        (col("id") * 2).as("v"))
+    val t = ParquetTable(spark, s"${tmp()}/t", Seq("k"))
+    t.merge(batch(0), Seq("k"))
+    t.overwrite(batch(100))
+    t.append(batch(200))
+    t.merge(batch(150), Seq("k"))
+    assert(t.read.count() == 150)
+    t.delete(col("k") >= 0)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dataRoot = java.nio.file.Paths.get(t.rootPath, "d")
+    t.history.map(_.version).foreach { v =>
+      manifestStats(t, v).keys.foreach { f =>
+        val md = graft.tables.ParquetFooters.read(dataRoot.resolve(f), conf)
+        assert(graft.tables.ParquetFooters.rowCount(md) > 0,
+          s"version $v lists the 0-row file $f")
+      }
+    }
+    assert(t.currentFiles.isEmpty)
+    val empty = t.read
+    assert(empty.count() == 0)
+    assert(empty.schema == t.readVersion(t.history.map(_.version).min).schema)
+    assert(empty.columns.toSeq == Seq("k", "v"))
+  }
+
+  test("a version mixing flat and partitioned dirs reads every partition value") {
+    import spark.implicits._
+    def batch(lo: Int, day: String) = (lo until lo + 20)
+      .map(i => (i, s"v$i", day)).toDF("k", "v", "day")
+      .withColumn("day", to_date(col("day")))
+    val t = ParquetTable(spark, s"${tmp()}/t", Seq("k"))
+    t.append(batch(0, "2024-05-01"), partitionBy = Seq("day"))
+    t.append(batch(20, "2024-05-02"), partitionBy = Seq("day"))
+    t.compact(1) // flattens: `day` is now a column of the one file
+    t.append(batch(40, "2024-05-03"), partitionBy = Seq("day"))
+    assert(t.currentFiles.exists(!_.contains("day=")) &&
+      t.currentFiles.exists(_.contains("day=")))
+    val df = t.read
+    assert(df.schema("day").dataType.typeName == "date")
+    val byDay = df.groupBy(col("day").cast("string")).count().as[(String, Long)]
+      .collect().toMap
+    assert(byDay == Map("2024-05-01" -> 20L, "2024-05-02" -> 20L,
+      "2024-05-03" -> 20L))
+    assert(df.filter(col("day") === to_date(lit("2024-05-03")))
+      .select("k").as[Int].collect().sorted.toSeq == (40 until 60))
+  }
 }
